@@ -19,6 +19,14 @@ layer is engine-native:
   input fingerprint — a restart recomputes only missing buckets and the
   final table is bit-identical (determinism tests guarantee per-bucket
   outputs don't depend on which run produced them).
+- Buckets run as a two-deep pipeline: the calling thread builds bucket
+  b+1's plan while a worker thread writes bucket b, so the executors
+  are not idle while the driver plans.  Manifests are still committed
+  on the calling thread in bucket order, and a bucket counts as done
+  only once its manifest exists: files a crash left without a manifest
+  are overwritten on resume.  Manifests and the snapshot log are
+  replaced atomically (temp file + ``os.replace``), so a crash mid-write
+  never truncates them.
 
 On Iceberg (prod) the same manifests ride along as snapshot summary
 properties; on the local filesystem they are plain JSON next to the
@@ -28,11 +36,16 @@ parquet output.
 from __future__ import annotations
 
 import json
+import os
+import tempfile
 import time
+from collections import deque
+from concurrent.futures import Future, ThreadPoolExecutor
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.util import inheritable_thread_target
 
 import gfwspark
 
@@ -62,9 +75,17 @@ def input_fingerprint(df: DataFrame, entity: str, ts: str, n_buckets: int = 0) -
     manifests (a bucket id means nothing across layouts)."""
     agg = df.select(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32(F.concat_ws("|", F.col(entity), F.col(ts).cast("string")))).alias("h"),
+        _exact_sum(F.crc32(F.concat_ws("|", F.col(entity), F.col(ts).cast("string")))).alias("h"),
     ).first()
     return f"n={agg['n']},h={agg['h']},b={n_buckets},v={_LAYOUT_VERSION}"
+
+
+def _exact_sum(col: Column) -> Column:
+    """Sum of a long column that cannot overflow.  A long sum raises
+    ARITHMETIC_OVERFLOW under ANSI mode once it passes 2^63 (about
+    4.3e9 crc32 values); decimal(38,0) holds 10^38.  A sum that fits in
+    a long prints the same digits, so existing fingerprints still match."""
+    return F.sum(col.cast("decimal(38,0)"))
 
 
 def _manifest_dir(output_path: str) -> Path:
@@ -82,6 +103,22 @@ def _fp_tag(fingerprint: str) -> str:
     import hashlib
 
     return hashlib.md5(fingerprint.encode()).hexdigest()
+
+
+def _replace_text(path: Path, text: str) -> None:
+    """Write ``path`` so that a reader sees the old or the new content,
+    never a truncated file: write a temp file in the same directory,
+    make it durable, then rename it over ``path``."""
+    fd, tmp = tempfile.mkstemp(dir=path.parent, prefix=f".{path.name}.", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        Path(tmp).unlink(missing_ok=True)
+        raise
 
 
 def completed_buckets(output_path: str, fingerprint: str) -> set[int]:
@@ -103,6 +140,12 @@ def completed_buckets(output_path: str, fingerprint: str) -> set[int]:
     return done
 
 
+# Buckets in flight at once: the calling thread plans the next bucket
+# while this one executes.  Deeper buys no more overlap (planning is
+# serial on the calling thread) and would hold more buckets in memory.
+_PIPELINE_DEPTH = 2
+
+
 def run_resumable(
     df: DataFrame,
     transform,
@@ -115,14 +158,29 @@ def run_resumable(
     """Apply `transform(bucket_df) -> DataFrame` per entity bucket,
     writing each bucket + manifest; resume skips completed buckets.
 
-    `fail_after_bucket` injects a mid-job crash (tests).  Returns a
-    summary dict {completed, skipped, total}.
+    A bucket is the unit of redo after a crash, exactly like the
+    reference re-runs only missing vessel files (run_inference.py:44-48
+    skips by path).  Buckets run as a two-deep pipeline:
 
-    Note: per-bucket sequential submission is deliberate — buckets are
-    the *checkpoint* granularity (coarse, e.g. 64 at prod scale), while
-    Spark parallelism lives *inside* each bucket job.  A bucket is the
-    unit of redo after a crash, exactly like the reference re-runs only
-    missing vessel files (run_inference.py:44-48 skips by path).
+    - ``transform`` is called on the calling thread, one bucket at a
+      time in bucket order, so it need not be thread-safe;
+    - the bucket's parquet write and the re-read of its stats run on a
+      worker thread (at most ``_PIPELINE_DEPTH`` buckets in flight), so
+      the next bucket is planned while this one executes.  Its Spark
+      jobs keep the caller's job group and tags, and are described as
+      ``run_resumable bucket <b>/<n_buckets>``;
+    - manifests are committed on the calling thread in bucket order as
+      results arrive.  A manifest's ``wall_s`` runs from the start of
+      the bucket's transform to its commit, so it includes time that
+      overlapped the neighbouring bucket.
+
+    If a bucket's transform or write fails, the buckets before it that
+    succeeded are still committed, the error is raised, and no worker
+    thread is left running.  `fail_after_bucket` injects a crash right after
+    that bucket's manifest is committed (tests): every bucket up to it
+    is committed, and the next bucket may already be written but has
+    no manifest, so a resume recomputes it.  Returns a summary dict
+    {completed, skipped, total}.
     """
     fp = input_fingerprint(df, entity, ts, n_buckets)
     done = completed_buckets(output_path, fp)
@@ -132,22 +190,19 @@ def run_resumable(
 
     bucketed = df.withColumn("_bucket", bucket_of(entity, n_buckets))
     skipped, completed = sorted(done), []
-    for b in range(n_buckets):
-        if b in done:
-            continue
+
+    def start(pool: ThreadPoolExecutor, b: int) -> tuple[int, float, str, Future]:
         t0 = time.time()
         part = transform(bucketed.filter(F.col("_bucket") == b).drop("_bucket"))
         out_dir = f"{output_path}/fp={_fp_tag(fp)}/part={b}"
-        part.write.mode("overwrite").parquet(out_dir)
-        # lineage stats come from the parquet just WRITTEN (one cheap
-        # re-read of this bucket's files), not from re-executing the
-        # transform — the manifest always describes the bytes on disk,
-        # even for a nondeterministic transform, and the job runs 1x.
-        stats = spark.read.parquet(out_dir).agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min(ts).alias("min_ts"),
-            F.max(ts).alias("max_ts"),
-        ).first()
+        # wrapped here, after transform returns: the worker inherits the
+        # caller's job group as it is now, so cancelJobGroup covers it
+        write = inheritable_thread_target(spark)(_write_bucket)
+        label = f"run_resumable bucket {b}/{n_buckets}"
+        return b, t0, out_dir, pool.submit(write, part, out_dir, ts, label)
+
+    def commit(b: int, t0: float, out_dir: str, fut: Future) -> None:
+        stats = fut.result()
         manifest = {
             "bucket": b,
             "status": "ok",
@@ -159,13 +214,55 @@ def run_resumable(
             "engine_version": gfwspark.__version__,
             "output": out_dir,
         }
-        (mdir / f"bucket_{_fp_tag(fp)}_{b}.json").write_text(json.dumps(manifest, indent=1))
+        _replace_text(mdir / f"bucket_{_fp_tag(fp)}_{b}.json", json.dumps(manifest, indent=1))
         completed.append(b)
         if fail_after_bucket is not None and b >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {b}")
 
+    # leaving the with-block joins the workers, on success and on error;
+    # a bucket still in flight behind an error is never committed, and
+    # its own result is not read (the error already being raised wins)
+    with ThreadPoolExecutor(_PIPELINE_DEPTH, thread_name_prefix="run_resumable") as pool:
+        in_flight: deque = deque()
+        for b in range(n_buckets):
+            if b in done:
+                continue
+            if len(in_flight) == _PIPELINE_DEPTH:
+                commit(*in_flight.popleft())
+            try:
+                in_flight.append(start(pool, b))
+            except BaseException as err:
+                # the buckets in flight precede b: commit them as a
+                # sequential run would have, then surface b's error
+                try:
+                    while in_flight:
+                        commit(*in_flight.popleft())
+                except Exception as drain_err:
+                    err.add_note(f"an earlier bucket was not committed: {drain_err!r}")
+                raise
+        while in_flight:
+            commit(*in_flight.popleft())
+
     _commit_snapshot(output_path, fp, n_buckets)
     return {"completed": completed, "skipped": skipped, "total": n_buckets}
+
+
+def _write_bucket(part: DataFrame, out_dir: str, ts: str, label: str):
+    """Worker-thread half of a bucket: write it, then take its lineage
+    stats from the parquet just WRITTEN (one cheap re-read of this
+    bucket's files), not from re-executing the transform — the manifest
+    always describes the bytes on disk, even for a nondeterministic
+    transform, and the job runs 1x."""
+    spark = part.sparkSession
+    # the description only: setJobGroup here would detach the bucket's
+    # jobs from the caller's group
+    spark.sparkContext.setLocalProperty("spark.job.description", label)
+    part.write.mode("overwrite").parquet(out_dir)
+    return spark.read.parquet(out_dir).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.min(ts).alias("min_ts"),
+        F.max(ts).alias("max_ts"),
+    ).first()
 
 
 def _commit_snapshot(output_path: str, fingerprint: str, n_buckets: int) -> None:
@@ -191,7 +288,7 @@ def _commit_snapshot(output_path: str, fingerprint: str, n_buckets: int) -> None
             "buckets": buckets,
         }
     )
-    log_path.write_text(json.dumps(log, indent=1))
+    _replace_text(log_path, json.dumps(log, indent=1))
 
 
 def read_snapshot(output_path: str, snapshot_id: int | None = None) -> dict:

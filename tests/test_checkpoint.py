@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import json
+import threading
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
 from gfwspark import checkpoint, features, tables
@@ -111,3 +113,110 @@ def test_snapshot_errors_are_actionable(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no committed snapshot"):
         ckpt.read_snapshot(str(tmp_path / "never_written"))
+
+
+def _sorted_result(spark, out):
+    cols = ["image_id", "ts", "phash_hamming", "ham_w_avg", "session_id"]
+    return (
+        checkpoint.read_result(spark, out).select(*cols).toPandas()
+        .sort_values(["image_id", "ts"]).reset_index(drop=True)
+    )
+
+
+class _TransformError(Exception):
+    pass
+
+
+@pytest.mark.parametrize("stage,k", [("plan", 2), ("execute", 1)])
+def test_failed_bucket_commits_earlier_buckets_and_resumes(spark, tmp_path, stage, k):
+    """Bucket k fails while the pipeline has its neighbour in flight:
+    either its transform raises on the calling thread ("plan") or its
+    write fails on the worker ("execute").  The original error
+    surfaces, exactly the buckets before k are committed, no worker
+    thread outlives the call, and a resume matches an uninterrupted run."""
+    df = tables.synthesize_image_caption(spark, n_entities=16, rows_per_entity=8)
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    checkpoint.run_resumable(df, _transform, out_a, n_buckets=4)
+
+    calls = []
+
+    def failing(bucket_df):
+        b = len(calls)
+        calls.append(b)
+        if b == k and stage == "plan":
+            raise _TransformError(f"transform failed for bucket {b}")
+        part = _transform(bucket_df)
+        if b == k:
+            part = part.where(F.raise_error(F.lit(f"write failed for bucket {b}")).isNull())
+        return part
+
+    err = _TransformError if stage == "plan" else Exception
+    with pytest.raises(err, match=f"failed for bucket {k}"):
+        checkpoint.run_resumable(df, failing, out_b, n_buckets=4)
+    assert not [t for t in threading.enumerate() if t.name.startswith("run_resumable")]
+    manifests = (tmp_path / "b" / "_manifests").glob("bucket_*.json")
+    assert {json.loads(m.read_text())["bucket"] for m in manifests} == set(range(k))
+
+    summary = checkpoint.run_resumable(df, _transform, out_b, n_buckets=4)
+    assert summary["skipped"] == list(range(k))
+    assert summary["completed"] == list(range(k, 4))
+    pd.testing.assert_frame_equal(_sorted_result(spark, out_a), _sorted_result(spark, out_b))
+
+
+def test_bucket_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Jobs launched on the pipeline's worker threads belong to the
+    caller's job group (so cancelJobGroup covers them) and carry the
+    bucket label as their description."""
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("run_resumable-test", "caller")
+    try:
+        checkpoint.run_resumable(df, _transform, str(tmp_path / "g"), n_buckets=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    store = sc._jsc.sc().statusStore()
+    labels = set()
+    for j in tracker.getJobIdsForGroup("run_resumable-test"):
+        d = store.job(j).description()
+        labels.add(d.get() if d.isDefined() else None)
+    assert {"run_resumable bucket 0/2", "run_resumable bucket 1/2"} <= labels
+
+
+def test_fingerprint_sum_cannot_overflow(spark):
+    """The crc32 sum passes 2^63 at about 4.3e9 rows, where a long sum
+    raises ARITHMETIC_OVERFLOW under ANSI mode.  A sum that fits in a
+    long keeps its old digits, so existing manifests still resume."""
+    h = spark.range(3).select(checkpoint._exact_sum(F.lit(2**62)).alias("h")).first()["h"]
+    assert h == 3 * 2**62
+
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    long_sum = df.select(
+        F.sum(F.crc32(F.concat_ws("|", "image_id", F.col("ts").cast("string"))))
+    ).first()[0]
+    assert f",h={long_sum}," in checkpoint.input_fingerprint(df, "image_id", "ts", 2)
+
+
+def test_failed_commit_keeps_previous_snapshot_log(spark, tmp_path, monkeypatch):
+    """A commit that dies while writing the snapshot log leaves the
+    previous log readable and no temp file behind."""
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    out = str(tmp_path / "atomic")
+    checkpoint.run_resumable(df, _transform, out, n_buckets=2)
+    rows = checkpoint.read_result(spark, out).count()
+
+    def crash(fd):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(checkpoint.os, "fsync", crash)
+    with pytest.raises(OSError, match="disk full"):
+        checkpoint.run_resumable(df, _transform, out, n_buckets=2)
+    monkeypatch.undo()
+
+    assert checkpoint.read_snapshot(out)["snapshot_id"] == 1
+    assert checkpoint.read_result(spark, out).count() == rows
+    assert not list((tmp_path / "atomic" / "_manifests").glob(".*.tmp"))
